@@ -2264,25 +2264,11 @@ def x_bm25_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     (x_append_consistency) ✓ IVF (x_ivf_append) ✓ BM25 ✓.
     Build+append run through the shared `_fx` ladder (once per
     process; see `_fx`)."""
-    from leann_rs_spark.catalog import py_term_bucket
-    from leann_rs_spark.operators.bm25 import score_query, tokenize_py
+    from leann_rs_spark.catalog import _bm25_scored, _bm25_top
 
     wh = _fx_appended(spark, sf_dir)
     base = f"{wh}/g"
-    qbuckets = sorted({py_term_bucket(t) for t in tokenize_py(_APPEND_QUERY)})
-    postings = spark.read.parquet(f"{base}/bm25_postings").filter(
-        F.col("term_bucket").isin(qbuckets)
-    )
-    docstats = spark.read.parquet(f"{base}/bm25_docstats")
-    termstats = postings.groupBy("term").agg(F.count("*").alias("df"))
-    scored = score_query(
-        postings, docstats, termstats, _APPEND_QUERY, id_col="idx"
-    )
-    top = (
-        scored.filter(F.col("score") > 0.0)
-        .orderBy(F.round(F.col("score"), 6).desc(), F.col("idx").asc())
-        .limit(_BM25APP_K)
-    )
+    top = _bm25_top(_bm25_scored(spark, base, _APPEND_QUERY)[0], _BM25APP_K)
     passages = spark.read.parquet(f"{base}/passages")
     return (
         F.broadcast(top)
@@ -3615,8 +3601,7 @@ def x_li_bm25_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings, exact because a term's rows never straddle buckets).
     Upstream candidate producers are the heavy distributed jobs; the
     fusion is two candidate-set windows + one full-outer join."""
-    from leann_rs_spark.catalog import load_token_index, py_term_bucket
-    from leann_rs_spark.operators.bm25 import score_query, tokenize_py
+    from leann_rs_spark.catalog import _bm25_scored, _bm25_top, load_token_index
     from leann_rs_spark.operators.hybrid import rrf_fuse
     from leann_rs_spark.operators.late_interaction import (
         late_interaction_topk_batch,
@@ -3627,20 +3612,9 @@ def x_li_bm25_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         tok, [(0, _HYBRID_QUERY)], k=_HYBRID_FETCH_K, dims=info["dims"]
     ).select("doc_id", F.col("score_r").alias("score"))
     base = _fx_bm25_docs_wh(spark, sf_dir)
-    qbuckets = sorted(
-        {py_term_bucket(t) for t in tokenize_py(_HYBRID_QUERY)}
-    )
-    postings = spark.read.parquet(f"{base}/bm25_postings").filter(
-        F.col("term_bucket").isin(qbuckets)
-    )
-    docstats = spark.read.parquet(f"{base}/bm25_docstats")
-    termstats = postings.groupBy("term").agg(F.count("*").alias("df"))
-    bm25_top = (
-        score_query(postings, docstats, termstats, _HYBRID_QUERY, id_col="idx")
-        .select(F.col("idx").alias("doc_id"), "score")
-        .filter(F.col("score") > 0.0)
-        .orderBy(F.round(F.col("score"), 6).desc(), F.col("doc_id").asc())
-        .limit(_HYBRID_FETCH_K)
+    scored, _ = _bm25_scored(spark, base, _HYBRID_QUERY)
+    bm25_top = _bm25_top(scored, _HYBRID_FETCH_K).select(
+        F.col("idx").alias("doc_id"), "score"
     )
     out = rrf_fuse(li_hits, bm25_top, k0=60)
     return out.select(
@@ -6820,13 +6794,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x_rollup_stats": x_rollup_stats,
         "x_curriculum_blocks": x_curriculum_blocks,
         "x_curation_pipeline_sigs": x_curation_pipeline_sigs,
-        "x_dedup_minhash_capped": x_dedup_minhash_capped,
-        "x_minhash_triage_topk": x_minhash_triage_topk,
         "x_ivf_append": x_ivf_append,
         "x_bm25_append": x_bm25_append,
         "x_stream_ivf_ingest": x_stream_ivf_ingest,
         "x_ivf_compact": x_ivf_compact,
-        "x_leakage_safe_split": x_leakage_safe_split,
         "x_append_consistency": x_append_consistency,
         "x_crawl_pipeline": x_crawl_pipeline,
         "x_curation_pipeline": x_curation_pipeline,
@@ -6834,7 +6805,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x_stream_sigs_ingest": x_stream_sigs_ingest,
         "x_minhash_sig_estimate": x_minhash_sig_estimate,
         "x_dedup_triage_pipeline": x_dedup_triage_pipeline,
-        "x_late_interaction": x_late_interaction,
         "x_stream_token_ingest": x_stream_token_ingest,
         "x_li_bm25_hybrid": x_li_bm25_hybrid,
         "x_token_index_compact": x_token_index_compact,
@@ -6844,20 +6814,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x_token_index_append": x_token_index_append,
         "x_late_interaction_pq": x_late_interaction_pq,
         "x_late_interaction_refined": x_late_interaction_refined,
-        "x_dedup_pr_bands": x_dedup_pr_bands,
         "x_li_kmeans_pruned": x_li_kmeans_pruned,
-        "x_analyze_report": x_analyze_report,
         "x_dsir_select": x_dsir_select,
         "x_select_pack": x_select_pack,
         "x_rrf_hybrid": x_rrf_hybrid,
         "x_mrl_topk": x_mrl_topk,
         "x_mmr_rerank": x_mmr_rerank,
-        "x_kcenter_sample": x_kcenter_sample,
         "q13_hybrid_search": q13_hybrid_search,
-        "q3_exact_topk_ip": q3_exact_topk_ip,
-        "q3_exact_topk_cosine": q3_exact_topk_cosine,
-        "q3_filtered_topk": q3_filtered_topk,
-        "q7_search_read_path": q7_search_read_path,
         "x_domain_mix": x_domain_mix,
         "x_pq_topk": x_pq_topk,
         "x_sq8_topk": x_sq8_topk,
@@ -6874,6 +6837,32 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x_ivf_drift_recall": x_ivf_drift_recall,
         "q2_ivf_batch_topk": q2_ivf_batch_topk,
         "r1_rag_batch": r1_rag_batch,
+        "x_top_ngrams": x_top_ngrams,
+        "x_hard_negatives": x_hard_negatives,
+        "x_bpe_merges": x_bpe_merges,
+        "x_bpe_encode": x_bpe_encode,
+        "x_html_strip": x_html_strip,
+        "x_text_nfc": x_text_nfc,
+        "q8_bm25_scored": q8_bm25_scored,
+        "q11_bm25_topk": q11_bm25_topk,
+        "q14_expansion_terms": q14_expansion_terms,
+        "x_token_kl": x_token_kl,
+        "x_ann_lsh_incremental": x_ann_lsh_incremental,
+        "x_ann_lsh_capped": x_ann_lsh_capped,
+        "x_ivf_refresh": x_ivf_refresh,
+        "x_quality_ensemble": x_quality_ensemble,
+        "x_cluster_assign": x_cluster_assign,
+        "x_semantic_dedup": x_semantic_dedup,
+        "q1_ivf_topk": q1_ivf_topk,
+        "x_ann_lsh_near_dups": x_ann_lsh_near_dups,
+        "x_corpus_stats": x_corpus_stats,
+        "x_lm_score": x_lm_score,
+        "x_tfidf_embed": x_tfidf_embed,
+        "x_tfidf_topk": x_tfidf_topk,
+        "x_bucketed_join": x_bucketed_join,
+        "x_stream_enrich": x_stream_enrich,
+        "x_stream_stream_join": x_stream_stream_join,
+        "q15_expanded_search": q15_expanded_search,
         "x_length_percentiles": x_length_percentiles,
         "x_stratified_sample": x_stratified_sample,
         "x_upsample": x_upsample,
@@ -6884,18 +6873,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x_asof_join_salted": x_asof_join_salted,
         "x_asof_nearest": x_asof_nearest,
         "x_paragraph_dedup": x_paragraph_dedup,
-        "x_top_ngrams": x_top_ngrams,
         "x_concat_chunk": x_concat_chunk,
-        "x_hard_negatives": x_hard_negatives,
         "x_temperature_mix": x_temperature_mix,
-        "x_bpe_merges": x_bpe_merges,
-        "x_bpe_encode": x_bpe_encode,
         "x_length_batches": x_length_batches,
-        "x_html_strip": x_html_strip,
-        "x_text_nfc": x_text_nfc,
-        "q8_bm25_scored": q8_bm25_scored,
-        "q11_bm25_topk": q11_bm25_topk,
-        "q14_expansion_terms": q14_expansion_terms,
         "x_c4_clean": x_c4_clean,
         "q5_filter_dsl_json": q5_filter_dsl_json,
         "q5_filter_dsl_columns": q5_filter_dsl_columns,
@@ -6919,7 +6899,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x_decontaminate": x_decontaminate,
         "x_stream_sessionize": x_stream_sessionize,
         "x_media_audio_features": x_media_audio_features,
-        "x_token_kl": x_token_kl,
         "x_table_diff": x_table_diff,
         "x_salted_join": x_salted_join,
         "x_table_stats": x_table_stats,
@@ -6935,12 +6914,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x_bq_batch_topk": x_bq_batch_topk,
         "q3_batch_topk": q3_batch_topk,
         "x_tfidf_keywords": x_tfidf_keywords,
-        "x_ann_lsh_incremental": x_ann_lsh_incremental,
         "x_dedup_simhash_capped": x_dedup_simhash_capped,
-        "x_ann_lsh_capped": x_ann_lsh_capped,
         "x_dedup_simhash_incremental": x_dedup_simhash_incremental,
-        "x_ivf_refresh": x_ivf_refresh,
-        "x_quality_ensemble": x_quality_ensemble,
         "x_rolling_anomaly": x_rolling_anomaly,
         "x_pmi_phrases": x_pmi_phrases,
         "x_json_props": x_json_props,
@@ -6966,25 +6941,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x_dedup_clusters": x_dedup_clusters,
         "x_dedup_embedding_cosine": x_dedup_embedding_cosine,
         "x_exact_substr": x_exact_substr,
-        "x_cluster_assign": x_cluster_assign,
-        "x_semantic_dedup": x_semantic_dedup,
         "x_dedup_editdist": x_dedup_editdist,
         "x_upsert": x_upsert,
         "x_dup_source_matrix": x_dup_source_matrix,
-        "q1_ivf_topk": q1_ivf_topk,
         "t2_code_chunks": t2_code_chunks,
         "t1_chunk_passages": t1_chunk_passages,
-        "x_ann_lsh_near_dups": x_ann_lsh_near_dups,
-        "x_corpus_stats": x_corpus_stats,
         "x_stream_window_stats": x_stream_window_stats,
         "x_stream_dedup": x_stream_dedup,
-        "x_lm_score": x_lm_score,
-        "x_tfidf_embed": x_tfidf_embed,
-        "x_tfidf_topk": x_tfidf_topk,
-        "x_bucketed_join": x_bucketed_join,
-        "x_stream_enrich": x_stream_enrich,
-        "x_stream_stream_join": x_stream_stream_join,
-        "q15_expanded_search": q15_expanded_search,
+        "x_dedup_minhash_capped": x_dedup_minhash_capped,
+        "x_minhash_triage_topk": x_minhash_triage_topk,
+        "x_leakage_safe_split": x_leakage_safe_split,
+        "x_late_interaction": x_late_interaction,
+        "x_dedup_pr_bands": x_dedup_pr_bands,
+        "x_analyze_report": x_analyze_report,
+        "x_kcenter_sample": x_kcenter_sample,
+        "q3_exact_topk_ip": q3_exact_topk_ip,
+        "q3_exact_topk_cosine": q3_exact_topk_cosine,
+        "q3_filtered_topk": q3_filtered_topk,
+        "q7_search_read_path": q7_search_read_path,
     }
 
 

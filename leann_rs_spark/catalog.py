@@ -6,17 +6,31 @@ meta (/root/reference/src/index/builder.rs:100-114, locate.rs:11-36,
 meta.rs:8-43). Here an index is a warehouse prefix of Parquet tables
 plus the same JSON meta:
 
-    <warehouse>/<name>/passages/        (idx, doc_id, source, chunk_*, text)
-    <warehouse>/<name>/embeddings/      (idx, embedding ARRAY<DOUBLE>)
-    <warehouse>/<name>/bm25_{postings,docstats,termstats}/   (optional)
-    <warehouse>/<name>/meta.json
+    <base> = <warehouse>/<name>
+    <base>/passages/                 (idx, doc_id, source, chunk_*, text)
+    <base>/embeddings/               (idx, embedding ARRAY<DOUBLE>)
+    <base>/bm25_postings/term_bucket=<b>/  (idx, term, tf)       with_bm25
+    <base>/bm25_docstats/            (idx, doc_len)               with_bm25
+    <base>/ivf/cluster_id=<c>/       (idx, embedding[, code])     build_ivf_index
+    <base>/ivf_centroids/            (centroid_id, centroid_vec)  build_ivf_index
+    <base>/pq_codebook/              (m, cid, cv)                 ... pq_m set
+    <base>/token_index/[cid=<c>/]    (id_col, token, vec)         build_token_index
+    <base>/minhash_sigs/             (id_col, sig ARRAY<BIGINT>)  build_minhash_index
+    <base>/meta.json
 
 The offset map, ids.txt, and graph artifact all disappear: Parquet
 predicate pushdown replaces the point-seek, the dense `idx` column
 replaces ids.txt, and exact top-k (operators/search.py) or IVF
 (operators/ann.py) replaces the graph. BM25 postings are persisted at
 build time — fixing the reference's rebuild-per-query inefficiency
-(src/index/searcher.rs:149-151).
+(src/index/searcher.rs:149-151). Term df counts have no table: they
+are not mergeable by append, so every read derives them from the
+bucket-pruned postings (`_bm25_scored`).
+
+Each layout decision lives in one private helper below (`_write_passages`,
+`_embed`, `_bm25_scored`/`_bm25_top`, `_query_vector`, `_with_passages`,
+`_with_pq_code`, `_write_ivf`, `_coarse_centroids`, `_ivf_meta`,
+`_artifact`, `_swap_rewrite`); the public functions compose them.
 
 Scale notes: every write is a plain partitioned Parquet write (no
 driver-side state); append (src/cli/update.rs:58-242 analog) offsets new
@@ -33,19 +47,57 @@ of your deployment; it's a few hundred bytes per index.
 
 from __future__ import annotations
 
+import hashlib
 import json
+import math
 import os
 import shutil
+import warnings
 from dataclasses import asdict, dataclass, field
+from typing import Callable
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from leann_rs_spark.operators.bm25 import build_bm25_index, score_query
+from leann_rs_spark.functions.text import hash64
+from leann_rs_spark.models import get_model_config
+from leann_rs_spark.operators.ann import (
+    ivf_assign,
+    ivf_search,
+    kmeans_centroids,
+    lloyd_refine_centroids,
+    take_centroids,
+)
+from leann_rs_spark.operators.bm25 import build_bm25_index, score_query, tokenize_py
 from leann_rs_spark.operators.chunker import chunk_documents
-from leann_rs_spark.operators.embedder import embed_documents
+from leann_rs_spark.operators.dedup import _minhash_signatures_bulk
+from leann_rs_spark.operators.embedder import (
+    embed_documents,
+    embed_pandas,
+    probe_dimensions,
+    py_hash_embedding,
+)
 from leann_rs_spark.operators.filter_dsl import compile_spark, parse as parse_filter
 from leann_rs_spark.operators.hybrid import hybrid_rerank, use_hybrid
+from leann_rs_spark.operators.late_interaction import (
+    assign_token_cids,
+    token_embeddings,
+    token_take_centroids,
+)
+from leann_rs_spark.operators.pq import (
+    codebook_from_rows,
+    codebook_to_rows,
+    ivf_pq_search,
+    kmeans_subcodebooks,
+    pq_bits,
+    pq_encode_col,
+    pq_pack_col,
+    pq_unpack_col,
+    take_subcodebooks,
+)
+from leann_rs_spark.operators.query_expansion import expansion_terms, should_expand
 from leann_rs_spark.operators.search import exact_search
+from leann_rs_spark.sources.warehouse import _recover_swap, _swap_in
 from leann_rs_spark.utils import with_dense_index
 
 META_VERSION = "1.0"  # mirrors IndexMeta.version (meta.rs:10-12)
@@ -98,8 +150,6 @@ def check_embedding_model(meta: IndexMeta, *, strict: bool) -> None:
     )
     if strict:
         raise ValueError(msg)
-    import warnings
-
     warnings.warn(msg, stacklevel=3)
 
 
@@ -112,6 +162,46 @@ def save_meta(warehouse: str, name: str, meta: IndexMeta) -> None:
     os.makedirs(_index_dir(warehouse, name), exist_ok=True)
     with open(_meta_path(warehouse, name), "w") as f:
         json.dump(asdict(meta), f, indent=2)
+
+
+def _write_passages(
+    spark: SparkSession, base: str, docs: DataFrame, *,
+    strategy: str, chunk_size: int, chunk_overlap: int, start: int | None = None,
+) -> DataFrame:
+    """Chunk → dense ids → passages table, then read the table back:
+    the embed and BM25 stages consume the read-back rows, which would
+    otherwise re-run the Python chunker + dense-id sort. `start=None`
+    overwrites (build, ids from 0); an int appends ids from `start` and
+    reads back ONLY the appended rows (idx >= start — a min/max
+    row-group prune on the scan)."""
+    chunks = chunk_documents(
+        docs, strategy=strategy, chunk_size=chunk_size, chunk_overlap=chunk_overlap
+    )
+    passages = with_dense_index(
+        chunks, ["doc_id", "chunk_index"], "idx", start=start or 0
+    )
+    passages.write.mode("overwrite" if start is None else "append").parquet(
+        f"{base}/passages"
+    )
+    passages = spark.read.parquet(f"{base}/passages")
+    return passages if start is None else passages.filter(F.col("idx") >= start)
+
+
+def _embed(
+    passages: DataFrame, provider, dims: int, prompt_template: str | None
+) -> DataFrame:
+    """Passages → (idx, embedding): through the hardened `embed_pandas`
+    slot when the index is provider-built, else the native
+    hash-expression embedder (build, append, and pruned-index
+    recompute all embed the same way)."""
+    src = passages.select("idx", "text")
+    if provider is not None:
+        emb = embed_pandas(src, provider, prompt_template=prompt_template)
+    else:
+        emb = embed_documents(
+            src, dims=dims, prompt_template=prompt_template, id_col="idx"
+        )
+    return emb.select("idx", "embedding")
 
 
 def build_index(
@@ -154,38 +244,21 @@ def build_index(
     describe the real model, which the provider probe confirms; the
     hash stand-in synthesizes whatever width it is asked for."""
     if embedding_model is not None:
-        from leann_rs_spark.models import get_model_config
-
         cfg = get_model_config(embedding_model)
         if doc_prompt_template is None and cfg.document_prefix:
             doc_prompt_template = cfg.document_prefix
         if query_prompt_template is None and cfg.query_prefix:
             query_prompt_template = cfg.query_prefix
     base = _index_dir(warehouse, name)
-    chunks = chunk_documents(
-        docs, strategy=strategy, chunk_size=chunk_size, chunk_overlap=chunk_overlap
+    passages = _write_passages(
+        spark, base, docs, strategy=strategy,
+        chunk_size=chunk_size, chunk_overlap=chunk_overlap,
     )
-    passages = with_dense_index(chunks, ["doc_id", "chunk_index"], "idx")
-    passages.write.mode("overwrite").parquet(f"{base}/passages")
-
-    passages = spark.read.parquet(f"{base}/passages")
     if provider is not None:
-        from leann_rs_spark.operators.embedder import embed_pandas, probe_dimensions
-
         dims = probe_dimensions(provider)
-        emb = embed_pandas(
-            passages.select("idx", "text"),
-            provider,
-            prompt_template=doc_prompt_template,
-        ).select("idx", "embedding")
-    else:
-        emb = embed_documents(
-            passages.select("idx", "text"),
-            dims=dims,
-            prompt_template=doc_prompt_template,
-            id_col="idx",
-        ).select("idx", "embedding")
-    emb.write.mode("overwrite").parquet(f"{base}/embeddings")
+    _embed(passages, provider, dims, doc_prompt_template).write.mode(
+        "overwrite"
+    ).parquet(f"{base}/embeddings")
 
     if with_bm25:
         _write_bm25(passages, base, mode="overwrite")
@@ -200,15 +273,11 @@ def build_index(
         extra={"bm25": with_bm25},
     )
     if embedding_model is not None:
-        from dataclasses import asdict as _asdict
-
         # resolved registry config travels with the index; the model
         # NAME lands in meta.embedding_model only on the provider path
         # (hash mode keeps its "hash-v2" version pin for
         # check_embedding_model)
-        meta.extra["model_config"] = {
-            "model": embedding_model, **_asdict(cfg)
-        }
+        meta.extra["model_config"] = {"model": embedding_model, **asdict(cfg)}
     if provider is not None:
         meta.embedding_mode = embedding_mode if embedding_mode != "hash" else "custom"
         meta.embedding_model = embedding_model or type(provider).__name__
@@ -224,16 +293,12 @@ def term_bucket(term: Column | str) -> Column:
     At 100 TB the postings table is partitioned on this: a query's
     `term_bucket IN (...)` predicate becomes PARTITION pruning — the
     scan skips whole directories, not just row groups."""
-    from leann_rs_spark.functions.text import hash64
-
     term = F.col(term) if isinstance(term, str) else term
     return (hash64(term) % TERM_BUCKETS).cast("int")
 
 
 def py_term_bucket(term: str) -> int:
     """Driver-side twin of `term_bucket` (same md5-derived hash)."""
-    import hashlib
-
     return int(hashlib.md5(term.encode()).hexdigest()[:15], 16) % TERM_BUCKETS
 
 
@@ -257,6 +322,40 @@ def _write_bm25(passages: DataFrame, base: str, mode: str) -> None:
     docstats.write.mode(mode).parquet(f"{base}/bm25_docstats")
     # termstats (df counts) are NOT incrementally mergeable by append —
     # always rebuilt from postings on read (vocabulary-sized aggregate).
+
+
+def _bm25_scored(
+    spark: SparkSession, base: str, query: str, keep: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """BM25-score `query` over the persisted postings → (scored (idx,
+    score), docstats). Partition pruning: all rows of a term share one
+    term_bucket, so restricting the scan to the query terms' buckets
+    reads ≤ |query terms| of the table's 64 partitions — and every
+    pruned-in term's rows are COMPLETE, so the df counts derived here
+    stay exact. `keep` (an idx frame) restricts postings and docstats
+    to filtered passages AFTER the df counts, which stay corpus-wide."""
+    qb = sorted({py_term_bucket(t) for t in tokenize_py(query)})
+    postings = spark.read.parquet(f"{base}/bm25_postings").filter(
+        F.col("term_bucket").isin(qb)
+    )
+    docstats = spark.read.parquet(f"{base}/bm25_docstats")
+    termstats = postings.groupBy("term").agg(F.count("*").alias("df"))
+    if keep is not None:
+        postings = postings.join(keep, "idx", "left_semi")
+        docstats = docstats.join(keep, "idx", "left_semi")
+    return score_query(postings, docstats, termstats, query, id_col="idx"), docstats
+
+
+def _bm25_top(scored: DataFrame, n: int) -> DataFrame:
+    """Top-n positive BM25 hits, cut on the 6dp-rounded score: BM25 term
+    sums are order-sensitive in the last ulp across engines, and the
+    rounded rank keeps candidate sets oracle-reproducible (sub-1e-6
+    reorderings are fp noise)."""
+    return (
+        scored.filter(F.col("score") > 0.0)
+        .orderBy(F.round(F.col("score"), 6).desc(), F.col("idx").asc())
+        .limit(n)
+    )
 
 
 def append_to_index(
@@ -318,42 +417,16 @@ def append_to_index(
             "rebuild the index or delete rows with idx >= "
             f"{meta.passage_count} before appending"
         )
-    chunks = chunk_documents(
-        new_docs,
-        strategy="auto",
-        chunk_size=meta.chunk_size,
-        chunk_overlap=meta.chunk_overlap,
-    )
-    passages = with_dense_index(
-        chunks, ["doc_id", "chunk_index"], "idx", start=meta.passage_count
-    )
-    passages.write.mode("append").parquet(f"{base}/passages")
-    # read back ONLY the appended rows (idx >= old passage_count — a
-    # min/max row-group prune on the scan): the embed and BM25 stages
-    # below would otherwise re-run the Python chunker + dense-id sort,
-    # the same write-then-read-back pattern build_index uses
-    passages = spark.read.parquet(f"{base}/passages").filter(
-        F.col("idx") >= meta.passage_count
+    passages = _write_passages(
+        spark, base, new_docs, strategy="auto", chunk_size=meta.chunk_size,
+        chunk_overlap=meta.chunk_overlap, start=meta.passage_count,
     )
     added = passages.count()
 
     if not meta.is_pruned:
-        if provider is not None:
-            from leann_rs_spark.operators.embedder import embed_pandas
-
-            emb = embed_pandas(
-                passages.select("idx", "text"),
-                provider,
-                prompt_template=meta.doc_prompt_template,
-            ).select("idx", "embedding")
-        else:
-            emb = embed_documents(
-                passages.select("idx", "text"),
-                dims=meta.dimensions,
-                prompt_template=meta.doc_prompt_template,
-                id_col="idx",
-            ).select("idx", "embedding")
-        emb.write.mode("append").parquet(f"{base}/embeddings")
+        _embed(
+            passages, provider, meta.dimensions, meta.doc_prompt_template
+        ).write.mode("append").parquet(f"{base}/embeddings")
 
     if meta.extra.get("bm25"):
         _write_bm25(passages, base, mode="append")
@@ -377,37 +450,22 @@ def append_to_index(
             # the rebuild result (first-n rows are append-invariant),
             # for "kmeans" the codebook simply does not drift with the
             # batch — pass ivf_append="rebuild" to re-learn it.
-            from leann_rs_spark.operators.ann import ivf_assign
-
             cents = spark.read.parquet(f"{base}/ivf_centroids")
             new_emb = spark.read.parquet(f"{base}/embeddings").filter(
                 F.col("idx") >= old_count
             )
             assigned = ivf_assign(new_emb, cents, id_col="idx")
             if pq_m is not None:
-                from leann_rs_spark.operators.pq import (
-                    codebook_from_rows,
-                    pq_bits,
-                    pq_encode_col,
-                    pq_pack_col,
-                )
-
                 cb = codebook_from_rows(
                     spark.read.parquet(f"{base}/pq_codebook").collect()
                 )
-                bits = pq_bits(int(meta.extra.get("pq_k", 16)))
-                assigned = assigned.withColumn(
-                    "code",
-                    pq_pack_col(
-                        pq_encode_col(F.col("embedding"), cb),
-                        int(pq_m),
-                        bits,
-                    ),
+                assigned = _with_pq_code(
+                    assigned, cb, int(pq_m), int(meta.extra.get("pq_k", 16))
                 )
-            n_centroids = int(meta.extra.get("ivf_centroids", 16))
-            assigned.repartition(n_centroids, "cluster_id").write.mode(
-                "append"
-            ).partitionBy("cluster_id").parquet(f"{base}/ivf")
+            _write_ivf(
+                assigned, f"{base}/ivf",
+                int(meta.extra.get("ivf_centroids", 16)), mode="append",
+            )
         else:
             meta = build_ivf_index(
                 spark, warehouse, name,
@@ -433,16 +491,10 @@ def list_indexes(spark: SparkSession, warehouse: str) -> DataFrame:
             mp = _meta_path(warehouse, name)
             if os.path.isfile(mp):
                 m = load_meta(warehouse, name)
-                rows.append(
-                    (
-                        name,
-                        m.backend,
-                        m.embedding_mode,
-                        m.dimensions,
-                        m.passage_count,
-                        m.is_pruned,
-                    )
-                )
+                rows.append((
+                    name, m.backend, m.embedding_mode, m.dimensions,
+                    m.passage_count, m.is_pruned,
+                ))
     return spark.createDataFrame(
         rows,
         "name string, backend string, embedding_mode string, "
@@ -480,30 +532,29 @@ def prune_index(warehouse: str, name: str) -> IndexMeta:
     """S14: drop the embeddings table, flag meta (src/cli/prune.rs:17-79,
     src/index/embeddings.rs:162-168). Search falls back to recompute."""
     meta = load_meta(warehouse, name)
-    emb_dir = os.path.join(_index_dir(warehouse, name), "embeddings")
-    if os.path.isdir(emb_dir):
-        shutil.rmtree(emb_dir)
+    base = _index_dir(warehouse, name)
+    _rmtree(f"{base}/embeddings")
     meta.is_pruned = True
     # the IVF layout embeds its own vector copies; dropping the source
     # embeddings means it can no longer be rebuilt (or appended to), so
     # drop it too and fall back to the exact/recompute read path
-    ivf_dir = os.path.join(_index_dir(warehouse, name), "ivf")
-    if os.path.isdir(ivf_dir):
-        shutil.rmtree(ivf_dir)
-        cdir = os.path.join(_index_dir(warehouse, name), "ivf_centroids")
-        if os.path.isdir(cdir):
-            shutil.rmtree(cdir)
+    if os.path.isdir(f"{base}/ivf"):
+        _rmtree(f"{base}/ivf")
+        _rmtree(f"{base}/ivf_centroids")
         meta.backend = "exact"
     # PQ codes live inside the ivf layout — with it gone, a surviving
     # pq_m in meta would pass search_ivf_index's use_pq guard and die
     # on the missing path later; drop the codebook artifact too
-    pq_dir = os.path.join(_index_dir(warehouse, name), "pq_codebook")
-    if os.path.isdir(pq_dir):
-        shutil.rmtree(pq_dir)
+    _rmtree(f"{base}/pq_codebook")
     meta.extra.pop("pq_m", None)
     meta.extra.pop("pq_k", None)
     save_meta(warehouse, name, meta)
     return meta
+
+
+def _rmtree(path: str) -> None:
+    if os.path.isdir(path):
+        shutil.rmtree(path)
 
 
 def _embeddings_for_search(
@@ -516,21 +567,39 @@ def _embeddings_for_search(
         # provider-built indexes recompute through the embed_pandas
         # slot with the same provider (recompute.rs:85-93's batched
         # provider calls).
-        if provider is not None:
-            from leann_rs_spark.operators.embedder import embed_pandas
-
-            return embed_pandas(
-                passages.select("idx", "text"),
-                provider,
-                prompt_template=meta.doc_prompt_template,
-            ).select("idx", "embedding")
-        return embed_documents(
-            passages.select("idx", "text"),
-            dims=meta.dimensions,
-            prompt_template=meta.doc_prompt_template,
-            id_col="idx",
-        ).select("idx", "embedding")
+        return _embed(passages, provider, meta.dimensions, meta.doc_prompt_template)
     return spark.read.parquet(f"{base}/embeddings")
+
+
+def _query_vector(meta: IndexMeta, query: str, provider=None) -> list[float]:
+    """The query embedding every search path scores with: prefix
+    concatenation — the reference's embed_with_template is
+    format!("{}{}", template, text) (src/embedding/mod.rs:126-143),
+    matching the doc-side with_prompt_template — embedded by the
+    index's own provider, or the hash embedder for hash-mode indexes."""
+    if meta.embedding_mode != "hash" and provider is None:
+        # the reference reconstructs the provider FROM meta before
+        # searching (search.rs:100-117); a provider-built index
+        # searched with the hash query embedder scores garbage
+        raise ValueError(
+            f"index built with embedding_mode={meta.embedding_mode!r}; "
+            "pass query_provider= (the same provider used at build time)"
+        )
+    qtext = (meta.query_prompt_template or "") + query
+    if provider is not None:
+        return [float(x) for x in provider.embed([qtext])[0]]
+    return py_hash_embedding(qtext, meta.dimensions)
+
+
+def _with_passages(hits: DataFrame, passages: DataFrame) -> DataFrame:
+    """Join the (idx, score) hit set to its passages → the search result
+    shape (idx, score, doc_id, source, text), best first."""
+    return (
+        F.broadcast(hits)
+        .join(passages, "idx")
+        .select("idx", "score", "doc_id", "source", "text")
+        .orderBy(F.col("score").desc(), F.col("idx").asc())
+    )
 
 
 def search_index(
@@ -563,8 +632,6 @@ def search_index(
     append them; the EXPANDED query then drives both the vector
     embedding and the hybrid BM25 side, as in the reference.
     """
-    from leann_rs_spark.operators.embedder import HashEmbedder, py_hash_embedding
-
     meta = load_meta(warehouse, name)
     check_embedding_model(meta, strict=False)
     base = _index_dir(warehouse, name)
@@ -572,65 +639,27 @@ def search_index(
     passages = passages_all
 
     if filter_str:
-        pred: Column | None = compile_spark(parse_filter(filter_str))
-        passages = passages.filter(pred)
+        passages = passages.filter(compile_spark(parse_filter(filter_str)))
 
     if hybrid is None:
         hybrid = use_hybrid(query, auto_hybrid=True)  # Q15 gate
 
     search_query = query
-    if expand and not meta.is_pruned and os.path.isdir(f"{base}/bm25_postings"):
-        from leann_rs_spark.operators.bm25 import tokenize_py
-        from leann_rs_spark.operators.query_expansion import (
-            expansion_terms,
-            should_expand,
-        )
+    if (expand and not meta.is_pruned and os.path.isdir(f"{base}/bm25_postings")
+            and should_expand(query)):
+        # BM25 over the persisted postings with the ORIGINAL query
+        # (no metadata filter — the reference's bm25_search scans
+        # all passages, search.rs:174)
+        top5 = _bm25_top(_bm25_scored(spark, base, query)[0], 5)
+        texts = F.broadcast(top5.select("idx")).join(passages_all, "idx")
+        # ≤5 mined terms collected driver-side — the reference's
+        # expand_from_passages is likewise a driver-side step over
+        # the 5 passage strings (query.rs:128-164)
+        mined = expansion_terms(texts, query, max_terms=5).collect()
+        if mined:
+            search_query = f"{query} {' '.join(r['term'] for r in mined)}"
 
-        if should_expand(query):
-            # BM25 over the persisted postings with the ORIGINAL query
-            # (no metadata filter — the reference's bm25_search scans
-            # all passages, search.rs:174). Candidate selection on the
-            # 6dp-rounded score: BM25 term sums are order-sensitive in
-            # the last ulp across engines, and the rounded rank keeps
-            # the mined-term set oracle-reproducible.
-            qb = sorted({py_term_bucket(t) for t in tokenize_py(query)})
-            postings0 = spark.read.parquet(f"{base}/bm25_postings").filter(
-                F.col("term_bucket").isin(qb)
-            )
-            docstats0 = spark.read.parquet(f"{base}/bm25_docstats")
-            termstats0 = postings0.groupBy("term").agg(F.count("*").alias("df"))
-            scored0 = score_query(postings0, docstats0, termstats0, query, id_col="idx")
-            top5 = (
-                scored0.filter(F.col("score") > 0.0)
-                .orderBy(F.round(F.col("score"), 6).desc(), F.col("idx").asc())
-                .limit(5)
-            )
-            texts = F.broadcast(top5.select("idx")).join(passages_all, "idx")
-            # ≤5 mined terms collected driver-side — the reference's
-            # expand_from_passages is likewise a driver-side step over
-            # the 5 passage strings (query.rs:128-164)
-            mined = expansion_terms(texts, query, max_terms=5).collect()
-            new_terms = [r["term"] for r in mined]
-            if new_terms:
-                search_query = f"{query} {' '.join(new_terms)}"
-
-    # prefix concatenation — the reference's embed_with_template is
-    # format!("{}{}", template, text) (src/embedding/mod.rs:126-143),
-    # matching the doc-side with_prompt_template
-    qtext = (meta.query_prompt_template or "") + search_query
-    if meta.embedding_mode != "hash" and query_provider is None:
-        # the reference reconstructs the provider FROM meta before
-        # searching (search.rs:100-117); a provider-built index
-        # searched with the hash query embedder scores garbage
-        raise ValueError(
-            f"index built with embedding_mode={meta.embedding_mode!r}; "
-            "pass query_provider= (the same provider used at build time)"
-        )
-    if query_provider is not None:
-        qv = [float(x) for x in query_provider.embed([qtext])[0]]
-    else:
-        qv = py_hash_embedding(qtext, meta.dimensions)
-
+    qv = _query_vector(meta, search_query, query_provider)
     emb = _embeddings_for_search(spark, base, meta, passages, provider=query_provider)
     if filter_str:
         # pushdown before scoring (src/index/recompute.rs:66-79): keep
@@ -641,41 +670,20 @@ def search_index(
     vec_hits = exact_search(emb, qv, k=fetch_k, id_col="idx", metric="ip")
 
     if hybrid:
-        from leann_rs_spark.operators.bm25 import tokenize_py
-
-        # Partition pruning: all rows of a term share one term_bucket,
-        # so restricting the scan to the query terms' buckets reads
-        # ≤ |query terms| of the table's 64 partitions — and every
-        # pruned-in term's rows are COMPLETE, so df counts stay exact.
-        qbuckets = sorted({py_term_bucket(t) for t in tokenize_py(search_query)})
-        postings = spark.read.parquet(f"{base}/bm25_postings").filter(
-            F.col("term_bucket").isin(qbuckets)
-        )
-        docstats = spark.read.parquet(f"{base}/bm25_docstats")
-        termstats = postings.groupBy("term").agg(F.count("*").alias("df"))
-        if filter_str:
-            keep = passages.select("idx")
-            postings = postings.join(keep, "idx", "left_semi")
-            docstats = docstats.join(keep, "idx", "left_semi")
         # the EXPANDED query drives the BM25 side (search.rs:204, the
-        # opts.with_hybrid(search_query) call). Persisted: the scored
-        # table feeds the candidate join, the min/max stats, and the
-        # top-k cut.
-        scored = score_query(
-            postings, docstats, termstats, search_query, id_col="idx"
-        ).persist()
-        # candidate cut on the 6dp-rounded score (cross-engine
-        # determinism; sub-1e-6 reorderings are fp noise) — the same
-        # rank the duckdb_hybrid_rerank twin uses
-        bm25_top = (
-            scored.filter(F.col("score") > 0.0)
-            .orderBy(F.round(F.col("score"), 6).desc(), F.col("idx").asc())
-            .limit(fetch_k)
+        # opts.with_hybrid(search_query) call)
+        scored, docstats = _bm25_scored(
+            spark, base, search_query,
+            keep=passages.select("idx") if filter_str else None,
         )
+        # Persisted: the scored table feeds the candidate join, the
+        # min/max stats, and the top-k cut (the same rounded rank the
+        # duckdb_hybrid_rerank twin uses).
+        scored = scored.persist()
         combined = hybrid_rerank(
             vec_hits.withColumnRenamed("idx", "doc_id"),
             scored.withColumnRenamed("idx", "doc_id"),
-            bm25_top.withColumnRenamed("idx", "doc_id"),
+            _bm25_top(scored, fetch_k).withColumnRenamed("idx", "doc_id"),
             docstats,
             alpha=hybrid_alpha,
         )
@@ -687,12 +695,7 @@ def search_index(
     else:
         hits = vec_hits.orderBy(F.col("score").desc(), F.col("idx").asc()).limit(k)
 
-    return (
-        F.broadcast(hits)
-        .join(passages, "idx")
-        .select("idx", "score", "doc_id", "source", "text")
-        .orderBy(F.col("score").desc(), F.col("idx").asc())
-    )
+    return _with_passages(hits, passages)
 
 
 # ---------------------------------------------------------------------------
@@ -707,9 +710,67 @@ def suggest_ivf_centroids(n_rows: int) -> int:
     scan cost is ~N/C of the corpus, so C must grow with N or every
     query's probed share balloons (the same C∝N lesson SURVEY §10
     measured for SemDeDup: frozen C=16 went quadratic at 10×)."""
-    import math
-
     return max(16, int(4 * math.sqrt(max(n_rows, 1))))
+
+
+def _coarse_centroids(
+    emb: DataFrame, policy: str, n_centroids: int, seed: int
+) -> DataFrame:
+    """The IVF codebook for a centroid policy (see build_ivf_index)."""
+    if policy == "kmeans":
+        return kmeans_centroids(emb, n_centroids, id_col="idx", seed=seed)
+    if policy == "take":
+        return take_centroids(emb, n_centroids, id_col="idx")
+    raise ValueError(f"unknown centroid policy {policy!r}")
+
+
+def _with_pq_code(assigned: DataFrame, cb, m: int, k: int) -> DataFrame:
+    """Add the IVF-PQ `code` column: the m×k product-quantized code of
+    `embedding`, packed into one bigint. Expression encode, deliberately:
+    the numpy-kernel form (pq_encode(kernel=True), bit-identical)
+    measured 2.5x SLOWER here — Arrow transfer of the vector column
+    dominates while the interpreted HOF runs at ~10 µs/row across
+    cores. Measured at 5k and 20k rows, both directions (SURVEY round-4
+    log)."""
+    return assigned.withColumn(
+        "code", pq_pack_col(pq_encode_col(F.col("embedding"), cb), m, pq_bits(k))
+    )
+
+
+def _write_ivf(assigned: DataFrame, path: str, n_centroids: int, mode: str) -> None:
+    # shuffle on the partition column before the partitioned write
+    # (same shape as the postings write): one task per cluster
+    # directory instead of every task writing a file into every one
+    assigned.repartition(n_centroids, "cluster_id").write.mode(mode).partitionBy(
+        "cluster_id"
+    ).parquet(path)
+
+
+def _ivf_meta(warehouse: str, name: str) -> tuple[str, IndexMeta]:
+    """(base dir, meta) of an index with an IVF layout; refuse others."""
+    meta = load_meta(warehouse, name)
+    if meta.backend != "ivf":
+        raise ValueError(f"index {name!r} has no IVF layout (backend={meta.backend})")
+    return _index_dir(warehouse, name), meta
+
+
+def _swap_rewrite(
+    live: str, write: Callable[[str], None], suffix: str = "__compacting"
+) -> int:
+    """The crash-safe rewrite every layout maintenance pass uses: heal a
+    crash window a previous pass left, clear a leftover temp dir,
+    `write(tmp)` the new layout beside the live one, and swap it in
+    with two renames — a crash mid-write leaves the live layout
+    intact. Returns the live dir's parquet file count before."""
+    _recover_swap(live)
+    n_files = sum(
+        1 for _, _, files in os.walk(live) for f in files if f.endswith(".parquet")
+    )
+    tmp = live + suffix
+    _rmtree(tmp)
+    write(tmp)
+    _swap_in(live, tmp)
+    return n_files
 
 
 def build_ivf_index(
@@ -753,78 +814,41 @@ def build_ivf_index(
     Layout: <base>/ivf/cluster_id=<c>/*.parquet + <base>/ivf_centroids/
     [+ <base>/pq_codebook/ when pq_m is set].
     """
-    from leann_rs_spark.operators.ann import (
-        ivf_assign,
-        kmeans_centroids,
-        take_centroids,
-    )
-
     base = _index_dir(warehouse, name)
     meta = load_meta(warehouse, name)
     emb = spark.read.parquet(f"{base}/embeddings")
     if n_centroids is None:
         # size the codebook to the corpus (see suggest_ivf_centroids)
         n_centroids = suggest_ivf_centroids(meta.passage_count)
-    if centroids == "kmeans":
-        cents = kmeans_centroids(emb, n_centroids, id_col="idx", seed=seed)
-    elif centroids == "take":
-        cents = take_centroids(emb, n_centroids, id_col="idx")
-    else:
-        raise ValueError(f"unknown centroid policy {centroids!r}")
+    cents = _coarse_centroids(emb, centroids, n_centroids, seed)
     assigned = ivf_assign(emb, cents, id_col="idx")
     if pq_m is not None:
-        from leann_rs_spark.operators.pq import (
-            codebook_to_rows,
-            kmeans_subcodebooks,
-            pq_bits,
-            pq_encode_col,
-            pq_pack_col,
-            take_subcodebooks,
-        )
-
         if centroids == "kmeans":
             cb = kmeans_subcodebooks(emb, m=pq_m, k=pq_k, seed=seed)
         else:
             cb = take_subcodebooks(emb, m=pq_m, k=pq_k, id_col="idx")
-        bits = pq_bits(pq_k)
-        # expression encode, deliberately: the numpy-kernel form
-        # (pq_encode(kernel=True), bit-identical) measured 2.5x SLOWER
-        # here — Arrow transfer of the vector column dominates while
-        # the interpreted HOF runs at ~10 µs/row across cores. Measured
-        # at 5k and 20k rows, both directions (SURVEY round-4 log).
-        assigned = assigned.withColumn(
-            "code",
-            pq_pack_col(
-                pq_encode_col(F.col("embedding"), cb), pq_m, bits
-            ),
-        )
+        assigned = _with_pq_code(assigned, cb, pq_m, pq_k)
         spark.createDataFrame(
             codebook_to_rows(cb),
             schema="m int, cid int, cv array<double>",
         ).write.mode("overwrite").parquet(f"{base}/pq_codebook")
-        meta.extra["pq_m"] = pq_m
-        meta.extra["pq_k"] = pq_k
+        meta.extra.update(pq_m=pq_m, pq_k=pq_k)
     else:
         meta.extra.pop("pq_m", None)
         meta.extra.pop("pq_k", None)
         # a previous pq-enabled build may have left its codebook behind
-        cb_dir = f"{base}/pq_codebook"
-        if os.path.isdir(cb_dir):
-            shutil.rmtree(cb_dir)
-    # shuffle on the partition column before the partitioned write
-    # (same shape as the postings write): one task per cluster
-    # directory instead of every task writing a file into every one
-    assigned.repartition(n_centroids, "cluster_id").write.mode(
-        "overwrite"
-    ).partitionBy("cluster_id").parquet(f"{base}/ivf")
+        _rmtree(f"{base}/pq_codebook")
+    _write_ivf(assigned, f"{base}/ivf", n_centroids, mode="overwrite")
     cents.write.mode("overwrite").parquet(f"{base}/ivf_centroids")
     meta.backend = "ivf"
-    meta.extra["ivf_centroids"] = n_centroids
-    meta.extra["ivf_policy"] = centroids
-    meta.extra["ivf_seed"] = seed
-    # the layout's birth size: ivf_drift_report splits occupancy into
-    # built-mass (idx < this) vs appended-mass (idx >= this)
-    meta.extra["ivf_built_count"] = meta.passage_count
+    meta.extra.update(
+        ivf_centroids=n_centroids,
+        ivf_policy=centroids,
+        ivf_seed=seed,
+        # the layout's birth size: ivf_drift_report splits occupancy
+        # into built-mass (idx < this) vs appended-mass (idx >= this)
+        ivf_built_count=meta.passage_count,
+    )
     save_meta(warehouse, name, meta)
     return meta
 
@@ -848,12 +872,7 @@ def ivf_drift_report(
     drift_ratio) — shares are of their own era's total; drift_ratio is
     NULL for clusters with no built mass (new-territory clusters, the
     strongest rebuild signal of all)."""
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    if meta.backend != "ivf":
-        raise ValueError(
-            f"index {name!r} has no IVF layout (backend={meta.backend})"
-        )
+    base, meta = _ivf_meta(warehouse, name)
     built = int(meta.extra.get("ivf_built_count", meta.passage_count))
     ivf = spark.read.parquet(f"{base}/ivf")
     per = ivf.groupBy("cluster_id").agg(
@@ -863,23 +882,19 @@ def ivf_drift_report(
     tot = per.agg(
         F.sum("n_built").alias("__tb"), F.sum("n_appended").alias("__ta")
     )
+    built_share = F.col("n_built") / F.greatest("__tb", F.lit(1))
+    appended_share = F.col("n_appended") / F.greatest("__ta", F.lit(1))
     return (
         per.crossJoin(F.broadcast(tot))
         .select(
             "cluster_id",
             "n_built",
             "n_appended",
-            (F.col("n_built") / F.greatest("__tb", F.lit(1))).alias(
-                "built_share"
+            built_share.alias("built_share"),
+            appended_share.alias("appended_share"),
+            F.when(F.col("n_built") > 0, appended_share / built_share).alias(
+                "drift_ratio"
             ),
-            (F.col("n_appended") / F.greatest("__ta", F.lit(1))).alias(
-                "appended_share"
-            ),
-            F.when(
-                F.col("n_built") > 0,
-                (F.col("n_appended") / F.greatest("__ta", F.lit(1)))
-                / (F.col("n_built") / F.greatest("__tb", F.lit(1))),
-            ).alias("drift_ratio"),
         )
         .orderBy("cluster_id")
     )
@@ -901,31 +916,15 @@ def compact_ivf_index(
     Writes to a sibling directory and swaps, so a crash mid-compact
     leaves the live layout intact. Returns the number of files before
     compaction."""
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    if meta.backend != "ivf":
-        raise ValueError(
-            f"index {name!r} has no IVF layout (backend={meta.backend})"
-        )
-    from leann_rs_spark.sources.warehouse import _recover_swap, _swap_in
-
+    base, meta = _ivf_meta(warehouse, name)
     ivf_dir = f"{base}/ivf"
-    _recover_swap(ivf_dir)  # heal a crash window from a previous compact
-    n_files = sum(
-        1
-        for root, _, files in os.walk(ivf_dir)
-        for f in files
-        if f.endswith(".parquet")
-    )
     n_centroids = int(meta.extra.get("ivf_centroids", 16))
-    tmp = f"{base}/ivf__compacting"
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)  # leftover from a crashed compact
-    spark.read.parquet(ivf_dir).repartition(
-        n_centroids, "cluster_id"
-    ).write.partitionBy("cluster_id").parquet(tmp)
-    _swap_in(ivf_dir, tmp)
-    return n_files
+    return _swap_rewrite(
+        ivf_dir,
+        lambda tmp: _write_ivf(
+            spark.read.parquet(ivf_dir), tmp, n_centroids, mode="error"
+        ),
+    )
 
 
 def refresh_ivf_index(
@@ -971,21 +970,10 @@ def refresh_ivf_index(
     Returns {total_rows, moved_rows, moved_fraction,
     affected_clusters, n_centroids}.
     """
-    from leann_rs_spark.operators.ann import (
-        ivf_assign,
-        kmeans_centroids,
-        take_centroids,
-    )
-    from leann_rs_spark.sources.warehouse import _recover_swap, _swap_in
-
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    if meta.backend != "ivf":
-        raise ValueError(
-            f"index {name!r} has no IVF layout (backend={meta.backend})"
-        )
+    base, meta = _ivf_meta(warehouse, name)
     ivf_dir = f"{base}/ivf"
     cents_dir = f"{base}/ivf_centroids"
+    # heal a crashed swap before reading either layout
     _recover_swap(ivf_dir)
     _recover_swap(cents_dir)
     policy = meta.extra.get("ivf_policy", "take")
@@ -1004,15 +992,11 @@ def refresh_ivf_index(
         # geometry actually drifted — a cold re-learn lands in a
         # different local optimum with permuted labels and moved 63%
         # of rows after a 3% append (measured, SCALE ivf_refresh).
-        from leann_rs_spark.operators.ann import lloyd_refine_centroids
-
         cents = lloyd_refine_centroids(
             emb, old_cents_df, id_col="idx", iters=3
         )
-    elif policy == "kmeans":
-        cents = kmeans_centroids(emb, n_centroids, id_col="idx", seed=seed)
     else:
-        cents = take_centroids(emb, n_centroids, id_col="idx")
+        cents = _coarse_centroids(emb, policy, n_centroids, seed)
     # LABEL ALIGNMENT (cold paths only — warm start already preserves
     # labels): a re-learned kmeans codebook permutes cluster ids
     # arbitrarily, so without alignment ~every row "moves" and the
@@ -1030,8 +1014,6 @@ def refresh_ivf_index(
     )
     new_cent_rows = cents.collect()
     if old_cent_rows:
-        import numpy as np
-
         old_ids = [int(r["centroid_id"]) for r in old_cent_rows]
         O = np.array([r["centroid_vec"] for r in old_cent_rows], dtype=np.float64)
         N = np.array([r["centroid_vec"] for r in new_cent_rows], dtype=np.float64)
@@ -1051,7 +1033,7 @@ def refresh_ivf_index(
         for i in range(len(N)):
             if i not in label_of:
                 label_of[i] = next(free)
-        relabeled = spark.createDataFrame(
+        cents = spark.createDataFrame(
             [
                 (label_of[i], list(r["centroid_vec"]))
                 for i, r in enumerate(new_cent_rows)
@@ -1060,7 +1042,6 @@ def refresh_ivf_index(
             # would perturb assignment scores against the oracle
             cents.select("centroid_id", "centroid_vec").schema,
         )
-        cents = relabeled
     # re-assign FROM THE LAYOUT (it already carries embedding + any pq
     # code), tagging each row with its current partition; extras are
     # functionally dependent on idx, so the uniqueness contract holds
@@ -1084,37 +1065,34 @@ def refresh_ivf_index(
         .collect()
     )
     if affected:
-        tmp = f"{base}/ivf__refreshing"
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)  # leftover from a crashed refresh
-        (
-            assigned.filter(F.col("cluster_id").isin(affected))
-            .drop("__old")
-            .repartition(len(affected), "cluster_id")
-            .write.partitionBy("cluster_id")
-            .parquet(tmp)
-        )
-        # carry unchanged partitions by hardlink — write bytes stay
-        # ∝ moved mass, not corpus size
         aff_names = {f"cluster_id={c}" for c in affected}
-        for d in os.listdir(ivf_dir):
-            if d.startswith("cluster_id=") and d not in aff_names:
-                os.makedirs(os.path.join(tmp, d), exist_ok=True)
-                for fname in os.listdir(os.path.join(ivf_dir, d)):
-                    os.link(
-                        os.path.join(ivf_dir, d, fname),
-                        os.path.join(tmp, d, fname),
-                    )
-        _swap_in(ivf_dir, tmp)
+
+        def write(tmp: str) -> None:
+            (
+                assigned.filter(F.col("cluster_id").isin(affected))
+                .drop("__old")
+                .repartition(len(affected), "cluster_id")
+                .write.partitionBy("cluster_id")
+                .parquet(tmp)
+            )
+            # carry unchanged partitions by hardlink — write bytes stay
+            # ∝ moved mass, not corpus size
+            for d in os.listdir(ivf_dir):
+                if d.startswith("cluster_id=") and d not in aff_names:
+                    os.makedirs(os.path.join(tmp, d), exist_ok=True)
+                    for fname in os.listdir(os.path.join(ivf_dir, d)):
+                        os.link(
+                            os.path.join(ivf_dir, d, fname),
+                            os.path.join(tmp, d, fname),
+                        )
+
+        _swap_rewrite(ivf_dir, write, "__refreshing")
     assigned.unpersist()
-    ctmp = f"{base}/ivf_centroids__refreshing"
-    if os.path.isdir(ctmp):
-        shutil.rmtree(ctmp)
-    cents.write.parquet(ctmp)
-    _swap_in(cents_dir, ctmp)
-    meta.extra["ivf_centroids"] = n_centroids
-    meta.extra["ivf_seed"] = seed
-    meta.extra["ivf_built_count"] = meta.passage_count
+    _swap_rewrite(cents_dir, cents.write.parquet, "__refreshing")
+    meta.extra.update(
+        ivf_centroids=n_centroids, ivf_seed=seed,
+        ivf_built_count=meta.passage_count,
+    )
     save_meta(warehouse, name, meta)
     return {
         "total_rows": total,
@@ -1147,18 +1125,11 @@ def search_ivf_index(
     — and, when refine > 0, exact-rescores only the top refine·k
     against the embeddings table. The 100 TB read path: scan bytes =
     (nprobe/C)·N·8 plus refine·k point reads."""
-    from leann_rs_spark.operators.ann import ivf_search
-    from leann_rs_spark.operators.embedder import py_hash_embedding
-
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    if meta.backend != "ivf":
-        raise ValueError(f"index {name!r} has no IVF layout (backend={meta.backend})")
-    # prefix concatenation, identical to search_index (and the
-    # reference's embed_with_template, src/embedding/mod.rs:126-143) —
-    # both paths must embed the identical query vector for a given index
-    qtext = (meta.query_prompt_template or "") + query
-    qv = py_hash_embedding(qtext, meta.dimensions)
+    base, meta = _ivf_meta(warehouse, name)
+    check_embedding_model(meta, strict=False)
+    # the same query vector search_index embeds for this index — a
+    # provider-built index refuses rather than scoring hash vectors
+    qv = _query_vector(meta, query)
     assigned = spark.read.parquet(f"{base}/ivf")
     cents = spark.read.parquet(f"{base}/ivf_centroids")
     if use_pq:
@@ -1167,13 +1138,6 @@ def search_ivf_index(
                 f"index {name!r} has no PQ codes — rebuild with "
                 f"build_ivf_index(pq_m=...)"
             )
-        from leann_rs_spark.operators.pq import (
-            codebook_from_rows,
-            ivf_pq_search,
-            pq_bits,
-            pq_unpack_col,
-        )
-
         m = int(meta.extra["pq_m"])
         bits = pq_bits(int(meta.extra["pq_k"]))
         cb = codebook_from_rows(
@@ -1184,25 +1148,14 @@ def search_ivf_index(
             pq_unpack_col(F.col("code"), m, bits).alias("code"),
             "cluster_id",
         )
-        vectors = (
-            spark.read.parquet(f"{base}/embeddings")
-            if refine > 0
-            else None
-        )
+        vectors = spark.read.parquet(f"{base}/embeddings") if refine > 0 else None
         hits = ivf_pq_search(
             codes, cents, cb, qv, k=k, nprobe=nprobe,
             refine=refine, vectors=vectors, id_col="idx",
         )
     else:
         hits = ivf_search(assigned, cents, qv, k=k, nprobe=nprobe, id_col="idx")
-    passages = spark.read.parquet(f"{base}/passages")
-    return (
-        F.broadcast(hits)
-        .join(passages, "idx")
-        .select("idx", "score", "doc_id", "source", "text")
-        .orderBy(F.col("score").desc(), F.col("idx").asc())
-    )
-
+    return _with_passages(hits, spark.read.parquet(f"{base}/passages"))
 
 def build_token_index(
     spark: SparkSession,
@@ -1243,12 +1196,6 @@ def build_token_index(
     + meta.extra["token_index"] = {dims, id_col, rows[, n_centroids,
     centroid_policy, centroids]}.
     """
-    from leann_rs_spark.operators.late_interaction import (
-        assign_token_cids,
-        token_embeddings,
-        token_take_centroids,
-    )
-
     base = _index_dir(warehouse, name)
     if docs is None:
         docs = spark.read.parquet(f"{base}/passages")
@@ -1266,8 +1213,6 @@ def build_token_index(
         tok = tok.persist()
         tok.count()
         if centroid_policy == "kmeans":
-            from leann_rs_spark.operators.ann import kmeans_centroids
-
             vocab = tok.select("token", "vec").distinct()
             cdf = kmeans_centroids(
                 vocab, n_centroids, id_col="token", vec_col="vec"
@@ -1280,9 +1225,10 @@ def build_token_index(
             raise ValueError(
                 f"unknown centroid_policy {centroid_policy!r}"
             )
-        info["n_centroids"] = n_centroids
-        info["centroid_policy"] = centroid_policy
-        info["centroids"] = cents
+        info.update(
+            n_centroids=n_centroids, centroid_policy=centroid_policy,
+            centroids=cents,
+        )
         assign_token_cids(tok, cents, id_col=id_col).write.mode(
             "overwrite"
         ).partitionBy("cid").parquet(f"{base}/token_index")
@@ -1297,6 +1243,25 @@ def build_token_index(
     meta.extra["token_index"] = info
     save_meta(warehouse, name, meta)
     return meta
+
+
+def _artifact(warehouse: str, name: str, kind: str) -> tuple[str, IndexMeta, dict]:
+    """(base dir, meta, meta.extra["<kind>_index"]) of an index carrying
+    the `kind` ("token" / "minhash") artifact; refuse others. The info
+    dict is live inside meta — mutate it, then save_meta."""
+    meta = load_meta(warehouse, name)
+    info = meta.extra.get(f"{kind}_index")
+    if not info:
+        raise ValueError(
+            f"index {name!r} has no {kind} index — run build_{kind}_index"
+        )
+    return _index_dir(warehouse, name), meta, info
+
+
+def _files_for(rows: int) -> int:
+    """Compacted file count for a row-count-sized artifact: ~1M rows per
+    file (see compact_token_index for the measured reason)."""
+    return max(1, -(-int(rows) // 1_000_000))
 
 
 # Token-index embedding models whose vectors are CORPUS-INDEPENDENT —
@@ -1336,18 +1301,7 @@ def append_to_token_index(
     rebuild produces — silently. Append therefore refuses any
     meta.model outside TOKEN_MODELS_APPENDABLE; metas written before
     the field existed were all hash-built and are treated as such."""
-    from leann_rs_spark.operators.late_interaction import (
-        assign_token_cids,
-        token_embeddings,
-    )
-
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    info = meta.extra.get("token_index")
-    if not info:
-        raise ValueError(
-            f"index {name!r} has no token index — run build_token_index"
-        )
+    base, meta, info = _artifact(warehouse, name, "token")
     model = info.get("model", "hash")
     if model not in TOKEN_MODELS_APPENDABLE:
         raise ValueError(
@@ -1396,55 +1350,31 @@ def compact_token_index(
     Writes to a sibling directory and swaps (crash mid-compact leaves
     the live layout intact). Returns the file count before
     compaction."""
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    info = meta.extra.get("token_index")
-    if not info:
-        raise ValueError(
-            f"index {name!r} has no token index — run build_token_index"
-        )
-    from leann_rs_spark.sources.warehouse import _recover_swap, _swap_in
-
+    base, _, info = _artifact(warehouse, name, "token")
     tok_dir = f"{base}/token_index"
-    _recover_swap(tok_dir)  # heal a crash window from a previous compact
-    n_files = sum(
-        1
-        for root, _, files in os.walk(tok_dir)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    tmp = f"{base}/token_index__compacting"
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)  # leftover from a crashed compact
-    df = spark.read.parquet(tok_dir)
-    if "centroids" in info:
-        df.repartition(int(info["n_centroids"]), "cid").write.partitionBy(
-            "cid"
-        ).parquet(tmp)
-    else:
-        # bounded file count, ~1M token rows (~100 MB at dims=32-64)
-        # per file: close to spark.sql.files.maxPartitionBytes, so the
-        # compacted scan still splits across executors. SCALE measured
-        # the over-compacted alternative: one ~300 MB file at the 10×
-        # fixture → 3 input splits → 40 s serving vs ~24 s fragmented.
-        n_out = max(1, -(-int(info["rows"]) // 1_000_000))
-        df.repartition(n_out).write.parquet(tmp)
-    _swap_in(tok_dir, tmp)
-    return n_files
 
+    def write(tmp: str) -> None:
+        df = spark.read.parquet(tok_dir)
+        if "centroids" in info:
+            df.repartition(int(info["n_centroids"]), "cid").write.partitionBy(
+                "cid"
+            ).parquet(tmp)
+        else:
+            # bounded file count, ~1M token rows (~100 MB at dims=32-64)
+            # per file: close to spark.sql.files.maxPartitionBytes, so the
+            # compacted scan still splits across executors. SCALE measured
+            # the over-compacted alternative: one ~300 MB file at the 10×
+            # fixture → 3 input splits → 40 s serving vs ~24 s fragmented.
+            df.repartition(_files_for(info["rows"])).write.parquet(tmp)
+
+    return _swap_rewrite(tok_dir, write)
 
 def load_token_index(
     spark: SparkSession, warehouse: str, name: str
 ) -> tuple[DataFrame, dict]:
     """Read the persisted token index → ((id_col, token, vec) frame,
     its meta dict {dims, id_col, rows}). Raises if the index has none."""
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    info = meta.extra.get("token_index")
-    if not info:
-        raise ValueError(
-            f"index {name!r} has no token index — run build_token_index"
-        )
+    base, _, info = _artifact(warehouse, name, "token")
     return spark.read.parquet(f"{base}/token_index"), info
 
 
@@ -1477,8 +1407,6 @@ def build_minhash_index(
     + meta.extra["minhash_index"] = {shingle_k, num_hashes, id_col,
     rows}. Docs shorter than shingle_k carry no signature (they cannot
     be near-dups — the bulk builder's documented drop)."""
-    from leann_rs_spark.operators.dedup import _minhash_signatures_bulk
-
     # `bands` is the artifact's DEFAULT query-time banding (a serving
     # config, recorded so the query path doesn't silently band over a
     # truncated signature prefix); num_hashes must tile into it.
@@ -1525,15 +1453,7 @@ def append_to_minhash_index(
     so appended rows are bit-identical to what a full rebuild would
     produce (the same argument as the hash-embedding token index; the
     x_minhash_index_dedup gate proves it through serving)."""
-    from leann_rs_spark.operators.dedup import _minhash_signatures_bulk
-
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    info = meta.extra.get("minhash_index")
-    if not info:
-        raise ValueError(
-            f"index {name!r} has no minhash index — run build_minhash_index"
-        )
+    base, meta, info = _artifact(warehouse, name, "minhash")
     sigs = _minhash_signatures_bulk(
         new_docs, id_col=info["id_col"], text_col=text_col,
         shingle_k=info["shingle_k"], num_hashes=info["num_hashes"],
@@ -1560,31 +1480,13 @@ def compact_minhash_index(
     spark.sql.files.maxPartitionBytes and the compacted scan still
     splits across executors — the over-compaction lesson). Row set
     unchanged; returns the file count before compaction."""
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    info = meta.extra.get("minhash_index")
-    if not info:
-        raise ValueError(
-            f"index {name!r} has no minhash index — run build_minhash_index"
-        )
-    from leann_rs_spark.sources.warehouse import _recover_swap, _swap_in
-
+    base, _, info = _artifact(warehouse, name, "minhash")
     sig_dir = f"{base}/minhash_sigs"
-    _recover_swap(sig_dir)
-    n_files = sum(
-        1
-        for _, _, files in os.walk(sig_dir)
-        for f in files
-        if f.endswith(".parquet")
+    n_out = _files_for(info["rows"])
+    return _swap_rewrite(
+        sig_dir,
+        lambda tmp: spark.read.parquet(sig_dir).repartition(n_out).write.parquet(tmp),
     )
-    tmp = f"{base}/minhash_sigs__compacting"
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-    n_out = max(1, -(-int(info["rows"]) // 1_000_000))
-    spark.read.parquet(sig_dir).repartition(n_out).write.parquet(tmp)
-    _swap_in(sig_dir, tmp)
-    return n_files
-
 
 def load_minhash_index(
     spark: SparkSession, warehouse: str, name: str
@@ -1593,11 +1495,5 @@ def load_minhash_index(
     meta dict {shingle_k, num_hashes, id_col, rows}). The frame is the
     `corpus_sigs` input of `minhash_near_dups_incremental` and the
     signature side of any banding config at n_hashes ≤ num_hashes."""
-    base = _index_dir(warehouse, name)
-    meta = load_meta(warehouse, name)
-    info = meta.extra.get("minhash_index")
-    if not info:
-        raise ValueError(
-            f"index {name!r} has no minhash index — run build_minhash_index"
-        )
+    base, _, info = _artifact(warehouse, name, "minhash")
     return spark.read.parquet(f"{base}/minhash_sigs"), info

@@ -763,7 +763,10 @@ def _lm_per_doc(
     directly: thresholds ignore NULL-xent rows anyway, so the duplicate
     plan branch feeding the (non-CSE'd) percentile aggregate skips the
     corpus-keys scan and restore join entirely (r11; ~0.3 s/gate at
-    sf0.1, one corpus scan fewer at scale)."""
+    sf0.1, one corpus scan fewer at scale).
+
+    Precondition: `id_col` is unique in `docs`. Rows are keyed by
+    `__id` alone, so duplicate ids merge their bigrams into one row."""
     toks = docs.select(F.col(id_col).alias("__id"), tokenize(text_col).alias("__t"))
     # in-row bigram construction: zip the array against itself shifted
     # by one (slice lengths clamp at 0 for short docs)
@@ -1038,7 +1041,13 @@ def lm_buckets(
 
     Scale shape: lm_score's two count shuffles + ONE tiny percentile
     aggregate (2 doubles) broadcast into a projection — no extra
-    corpus shuffle."""
+    corpus shuffle.
+
+    Precondition: `id_col` is unique in `docs`. The thresholds are
+    percentiles over `_lm_per_doc` (one row per distinct id), which
+    equal percentiles over the output rows (and the DuckDB oracle's)
+    only when each id names one row; duplicate ids shift the cut
+    points."""
     f1, f2 = fractions
     if not (0.0 < f1 < f2 < 1.0):
         raise ValueError(f"need 0 < f1 < f2 < 1, got {fractions!r}")

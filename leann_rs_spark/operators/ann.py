@@ -25,11 +25,14 @@ does on a single node, with no custom storage format. Probing more
 clusters trades cost for recall exactly like the reference's
 `complexity` beam-width knob (src/backend/diskann.rs:47-62).
 
-Centroid choice is `vec_id < n_centroids` (deterministic, oracle-
-reproducible). Quality-wise this is a random sample for synthetic data;
-swap in KMeans(seed=…) offline for production — search semantics are
-unchanged, which is why the oracle pins THIS module's math, not the
-centroid policy.
+Centroid choice has two policies with the same (centroid_id,
+centroid_vec) shape. `kmeans_centroids` (seeded spherical MLlib KMeans)
+is the default of catalog.build_ivf_index: a learned codebook balances
+cluster sizes on real embeddings, which is what makes nprobe/C pruning
+pay. `take_centroids` (the n smallest ids, `id < n_centroids`) is the
+deterministic, oracle-reproducible policy the gates use. Search
+semantics do not depend on the policy, which is why the oracle pins
+THIS module's math, not the codebook.
 """
 
 from __future__ import annotations

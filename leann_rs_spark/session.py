@@ -12,13 +12,28 @@ import os
 from pyspark.sql import SparkSession
 
 
+def effective_cpus() -> int:
+    """Core count the session runs with: SPARK_GRAFT_CPUS if set, else
+    the machine's. Reporting code reads it here so the recorded figure
+    always matches the session's local[N]."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return os.cpu_count() or 4
+    try:
+        return int(raw)
+    except ValueError:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be an integer core count, got {raw!r}"
+        ) from None
+
+
 def get_spark(
     app_name: str = "leann-rs-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = effective_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
 

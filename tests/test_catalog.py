@@ -699,9 +699,37 @@ def test_compact_ivf_after_appends(spark, docs, warehouse):
     assert hits_after == hits_before
 
 
-def test_compact_refuses_non_ivf(spark, docs, warehouse, built):
+@pytest.mark.parametrize(
+    "fn, args",
+    [
+        pytest.param("search_ivf_index", ("alpha beta",), id="search_ivf_index"),
+        pytest.param("compact_ivf_index", (), id="compact_ivf_index"),
+        pytest.param("refresh_ivf_index", (), id="refresh_ivf_index"),
+        pytest.param("ivf_drift_report", (), id="ivf_drift_report"),
+    ],
+)
+def test_ivf_entry_points_refuse_non_ivf(spark, warehouse, built, fn, args):
     with pytest.raises(ValueError, match="no IVF layout"):
-        catalog.compact_ivf_index(spark, warehouse, "main")
+        getattr(catalog, fn)(spark, warehouse, "main", *args)
+
+
+def test_ivf_search_refuses_provider_built_index(spark, docs, warehouse):
+    """search_ivf_index embeds the query through the same helper as
+    search_index: an index built with a provider has no hash query
+    vector, so the IVF path refuses instead of returning rows scored
+    against hash-embedded queries."""
+    from leann_rs_spark.operators.embedder import HashEmbedder
+
+    catalog.build_index(
+        spark, warehouse, "provivf", docs.filter(F.col("doc_id") < 10),
+        chunk_size=16, chunk_overlap=4, with_bm25=False,
+        provider=HashEmbedder(32),
+    )
+    catalog.build_ivf_index(
+        spark, warehouse, "provivf", n_centroids=2, centroids="take"
+    )
+    with pytest.raises(ValueError, match="query_provider"):
+        catalog.search_ivf_index(spark, warehouse, "provivf", "data", k=3)
 
 
 def test_ivf_refresh_equals_rebuild_and_links_unmoved(spark, docs, warehouse):
@@ -798,11 +826,6 @@ def test_ivf_refresh_equals_rebuild_and_links_unmoved(spark, docs, warehouse):
     assert ref2 == ref
 
 
-def test_ivf_refresh_refuses_non_ivf(spark, docs, warehouse, built):
-    with pytest.raises(ValueError, match="no IVF layout"):
-        catalog.refresh_ivf_index(spark, warehouse, "main")
-
-
 def test_ivf_drift_report(spark, docs, warehouse):
     """After an incremental append, the drift report splits occupancy
     into built vs appended mass; shares sum to 1 within each era and
@@ -830,11 +853,6 @@ def test_ivf_drift_report(spark, docs, warehouse):
     for r in rep:
         if r["n_built"] > 0:
             assert r["drift_ratio"] is not None and r["drift_ratio"] >= 0
-
-
-def test_ivf_drift_report_refuses_non_ivf(spark, docs, warehouse, built):
-    with pytest.raises(ValueError, match="no IVF layout"):
-        catalog.ivf_drift_report(spark, warehouse, "main")
 
 
 def test_minhash_index_build_append_load_roundtrip(spark, tmp_path):
